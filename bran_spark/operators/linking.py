@@ -13,29 +13,35 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def link_mentions(mentions: DataFrame, mesh_dict: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Returns (linked, unlinked).
-
-    linked  = mentions + canonical_name, entity type REVALIDATED against
-    the dictionary: a mention whose type contradicts its resolved entity's
-    type (e.g. a 'Chemical' mention whose mesh id is a Disease entry) is
-    quarantined, not passed through — type-inconsistent rows would
-    otherwise flow straight into pair generation.
-    unlinked = mentions whose mesh_id is absent from the dictionary OR
-    type-contradictory — quarantined for the lineage counters, mirroring
-    the reference's drop of '-1' unlinkable ids (SURVEY.md §2 F2) but
-    without losing the rows.
-    """
+def resolve_mentions(mentions: DataFrame, mesh_dict: DataFrame) -> DataFrame:
+    """mentions + canonical_name + ``linked``: one broadcast join against
+    the dictionary. ``linked`` is true when the mesh id resolves AND the
+    entity type REVALIDATES against the dictionary entry — a 'Chemical'
+    mention whose mesh id is a Disease entry is not linked, so
+    type-inconsistent rows never flow into pair generation."""
     dim = F.broadcast(
         mesh_dict.select("mesh_id", "canonical_name", F.col("type").alias("dict_type"))
     )
-    j = mentions.join(dim, "mesh_id", "left")
-    ok = F.col("canonical_name").isNotNull() & (
-        F.col("type") == F.col("dict_type")
+    # no coalesce: the bare conjunction keeps the linked filter null-rejecting
+    # on the dictionary side, so Catalyst plans the linked view as an inner
+    # join; a NULL entry type reads as not linked in split_resolved
+    linked = F.col("canonical_name").isNotNull() & (F.col("type") == F.col("dict_type"))
+    return (
+        mentions.join(dim, "mesh_id", "left")
+        .withColumn("linked", linked)
+        .drop("dict_type")
     )
-    linked = j.where(ok).drop("dict_type")
-    unlinked = j.where(~ok | F.col("canonical_name").isNull()).drop(
-        "canonical_name", "dict_type"
+
+
+def split_resolved(resolved: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(linked, unlinked) views of resolve_mentions output. unlinked =
+    mentions whose mesh_id is absent from the dictionary OR
+    type-contradictory — quarantined for the lineage counters, mirroring the
+    reference's drop of '-1' unlinkable ids (SURVEY.md §2 F2) but without
+    losing the rows."""
+    linked = resolved.where("linked").drop("linked")
+    unlinked = resolved.where(~F.coalesce("linked", F.lit(False))).drop(
+        "linked", "canonical_name"
     )
     return linked, unlinked
 
@@ -59,7 +65,7 @@ def canonical_triples(triples: DataFrame, mesh_dict: DataFrame) -> DataFrame:
 def canonical_surface_forms(mentions: DataFrame) -> DataFrame:
     """Surface-form resolution: for each entity, its most frequent mention
     text in the corpus — the canonicalization signal when no curated
-    dictionary name exists (the inverse of link_mentions, which assumes
+    dictionary name exists (the inverse of resolve_mentions, which assumes
     one). Returns (mesh_id, surface, n_mentions).
 
     Two-phase: count by (mesh_id, text) with map-side partial agg (the only

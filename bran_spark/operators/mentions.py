@@ -36,7 +36,7 @@ def detect_mentions(docs_with_words: DataFrame, mesh_dict: DataFrame) -> DataFra
     """Dictionary NER: match word tokens against entity surface forms.
 
     Input needs columns ``doc_id`` and ``words array<struct<word,start,end>>``
-    (functions.bpe.with_tokens). Output matches the fixture ``mentions``
+    (functions.bpe.with_words). Output matches the fixture ``mentions``
     schema: (doc_id, mention_id, type, mesh_id, start, end, text).
 
     mention_id is deterministic AND unique:

@@ -1313,16 +1313,16 @@ def bpe_tokens_fixture(spark, sf):
     frequency (python-UDF stage — rows-only; exactness covered by the
     round-trip/offset pytest properties)."""
     from bran_spark.fixtures.gen import ensure, fixture_dir
+    from bran_spark.functions.bpe import with_tokens
     from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
     s = _fixture_sf_for(sf)
     ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
-    toks = Pipeline(spark, cfg).tokenized()
+    cfg = PipelineConfig(fixture_dir=fixture_dir(s), checkpoint=False)
+    p = Pipeline(spark, cfg)
+    toks = with_tokens(p.texts(), p.codec_bc())
     return (
-        toks.select(F.explode("tokens").alias("t"))
+        toks.select(F.explode(F.slice("tokens", 1, cfg.max_tokens)).alias("t"))
         .groupBy(F.col("t.tok").alias("tok"))
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -1365,24 +1365,13 @@ def ner_tags_fixture(spark, sf):
     Model forward — rows-only check; bitwise parity vs local NumPy is pinned
     by tests/test_model.py::test_ner_head_matches_local_numpy."""
     from bran_spark.fixtures.gen import ensure, fixture_dir
-    from bran_spark.functions.bpe import full_text_col, with_token_arrays
     from bran_spark.model.scorer import score_documents
     from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
     s = _fixture_sf_for(sf)
     ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
-    p = Pipeline(spark, cfg)
-    docs = with_token_arrays(
-        p._even_repartition(p.documents()).withColumn(
-            "full_text", full_text_col("spans")
-        ),
-        p.codec_bc(),
-        max_tokens=cfg.max_tokens,
-    ).select("doc_id", "tok_ids", "tok_starts")
-    return score_documents(docs, p.weights_bc(), emit="ner")
+    p = Pipeline(spark, PipelineConfig(fixture_dir=fixture_dir(s), checkpoint=False))
+    return score_documents(p.token_arrays(), p.weights_bc(), emit="ner")
 
 
 _SIMHASH_BITS = 16
@@ -1903,9 +1892,7 @@ def _fx_mentions(spark, sf) -> DataFrame:
 
     s = _fixture_sf_for(sf)
     ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s), checkpoint_root="/tmp/bran_ckpt_q", checkpoint=False
-    )
+    cfg = PipelineConfig(fixture_dir=fixture_dir(s), checkpoint=False)
     return _fx_memo(
         spark, "mentions", s,
         lambda: Pipeline(spark, cfg).stage_mentions(resume=False),
@@ -4322,22 +4309,16 @@ def rerank_fixture(spark, sf):
     by design; correctness carried by the bitwise NumPy-parity pin in
     tests/test_model.py."""
     from bran_spark.fixtures.gen import ensure, fixture_dir
-    from bran_spark.functions.bpe import full_text_col, with_token_arrays
+    from bran_spark.functions.bpe import with_token_arrays
     from bran_spark.model.rerank import rerank_pairs
     from bran_spark.operators.search import bm25_topk
     from bran_spark.plans.pipeline import Pipeline, PipelineConfig
 
     s = _fixture_sf_for(sf)
     ensure(s)
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir(s),
-        checkpoint_root="/tmp/bran_ckpt_q",
-        checkpoint=False,
-    )
+    cfg = PipelineConfig(fixture_dir=fixture_dir(s), checkpoint=False)
     p = Pipeline(spark, cfg)
-    docs = p._even_repartition(p.documents()).withColumn(
-        "full_text", full_text_col("spans")
-    )
+    docs = p.texts()
     # query = the corpus's two most frequent words (deterministic count +
     # lexicographic tie-break): the fixture lexicon is synthetic, so the
     # query must be derived from the corpus itself, exactly as a smoke
@@ -4356,11 +4337,7 @@ def rerank_fixture(spark, sf):
     cands = bm25_topk(
         docs, terms, id_col="doc_id", text_col="full_text", k=10
     )
-    cand_toks = with_token_arrays(
-        docs.join(cands.select("doc_id"), "doc_id"),
-        p.codec_bc(),
-        max_tokens=cfg.max_tokens,
-    ).select(
+    cand_toks = p.token_arrays(docs.join(cands.select("doc_id"), "doc_id")).select(
         F.col("doc_id").alias("cand_id"), F.col("tok_ids").alias("c_tok_ids")
     )
     query = with_token_arrays(

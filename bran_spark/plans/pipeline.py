@@ -1,59 +1,74 @@
-"""The flagship KG-construction DAG (SURVEY.md §3 E3, §4.4).
+"""The flagship KG-construction DAG (SURVEY.md §3 E3, §4.4) — one stage
+graph, built once per Pipeline, in both modes:
 
 documents_interleaved ──(JVM array ops)── full_text
-  → BPE tokenize (Arrow pandas UDF, X1)
-  → mention detection (broadcast dict join, JVM) → linking/canonicalize (J4)
-  → length-bucketed encode+score (mapInPandas, P1+P2) — per-bucket commits
-  → LSE pooling (A2, relational) → threshold (F7)
-  → triples (D8) partitioned by pred (S7) → salted dedup/edges (A5/P3)
-  → eval vs gold (J6/J7/A4)
+  → word split (Arrow pandas UDF) → mention detection (broadcast dict join)
+    → dictionary linking (broadcast join, J4)
+  → BPE token arrays (Arrow pandas UDF, X1) ⋈ per-doc mention lists
+    → encode + bi-affine score (mapInPandas, P1+P2)
+  → LSE pooling (A2) → threshold (F7) → canonical triples (D8)
+  → salted dedup/edges (A5/P3; run() only)
 
-Every stage commits through ManifestParquetTableIO (lineage + counters);
-``resume=True`` skips committed stages/buckets — the kill-and-rerun
-idempotency gate in tests/test_resume.py drives exactly this path.
+Lazy mode (``checkpoint=False``, what ``flagship()`` and ``entry()`` build)
+composes the stages into one plan and touches no disk; under run() each
+stage carries an Observation for its row count. The sf0.001 plan on local[4] has 3
+ArrowEvalPython nodes (words_udf twice: Catalyst pushes the filter it
+infers from detection's posexplode below the even repartition, so the UDF
+also runs on the raw splits; ta_udf once), 1 MapInPandas and 5 shuffle
+Exchanges: a round-robin split before each of the three Python stages, the
+per-doc mention collect on doc_id, and the LSE pool on (doc, chem, dis).
+tests/test_plan_shape.py pins these counts.
 
-Shuffle budget (SURVEY.md §4.4): detection join is broadcast (no shuffle);
-the scoring stage repartitions by range on n_toks (shuffle 1 — doubles as
-W1 length bucketing); LSE pools on (doc, chem, dis) (shuffle 2); triple
-dedup on (subj, pred, obj) (shuffle 3). Nothing else exchanges.
+Checkpoint mode (``checkpoint=True``) runs the same stages but commits each
+one through ManifestParquetTableIO (lineage, config hash, observed row
+counts) and hands the re-read table to the next stage; ``resume=True``
+serves a committed stage whose config and input snapshots still match.
+Detection + linking commit once, and the unlinked quarantine is derived
+from that commit, so the word split runs in one action. Scoring commits
+per doc_id hash bucket; the bucket predicate reaches the document FileScan,
+so each bucket tokenizes only its own documents. tests/test_resume.py
+drives the kill-and-rerun path.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bran_spark.functions.bpe import (
     full_text_col,
     load_codec,
     with_token_arrays,
-    with_tokens,
     with_words,
 )
 from bran_spark.model.encoder import Weights
 from bran_spark.model.scorer import score_documents
 from bran_spark.operators.evaluate import confusion
-from bran_spark.operators.linking import canonical_triples, link_mentions
+from bran_spark.operators.linking import canonical_triples, resolve_mentions, split_resolved
 from bran_spark.operators.mentions import detect_mentions
 from bran_spark.operators.pooling import dedup_triples, lse_pool, threshold, to_triples
-from bran_spark.sources.tableio import ManifestParquetTableIO
+from bran_spark.sources.tableio import ManifestParquetTableIO, observe_counts
 
 
 @dataclass
 class PipelineConfig:
     fixture_dir: str
-    checkpoint_root: str
+    checkpoint_root: str | None = None  # required when checkpoint=True
     theta: float = 0.0
     score_buckets: int = 8          # resume granularity of the expensive stage
     salt_buckets: int = 16          # P3 skew fan-out
     max_tokens: int = 512           # F4 cap
     checkpoint: bool = True
     emit: str = "pairs"             # "pairs" | "both" (joint NER+pairs, P4)
-    extra: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.checkpoint and self.checkpoint_root is None:
+            raise ValueError("checkpoint=True needs a checkpoint_root")
 
 
 class Pipeline:
@@ -69,13 +84,20 @@ class Pipeline:
         fixture tables from cfg.fixture_dir."""
         self.spark = spark
         self.cfg = cfg
-        self.io = ManifestParquetTableIO(cfg.checkpoint_root)
+        self.io = ManifestParquetTableIO(cfg.checkpoint_root) if cfg.checkpoint else None
         self._docs_df = docs_df
         self._mesh_df = mesh_df
         self._codec_bc = None
         self._weights_bc = None
-        self._toks_cache = None
         self._src_parts = None
+        # stage name -> reader of {"rows": n, **counters}, valid once the
+        # stage has run. Lazy stages carry an Observation only once run()
+        # counts: its CollectMetrics node blocks optimizer rewrites below it,
+        # and a session's first Observation installs a listener that walks
+        # the plan of every later query — flagship() and the registry
+        # queries read no counts and pay for neither.
+        self._counts: dict[str, Callable[[], dict[str, int]]] = {}
+        self._counting = False
 
     # ---- inputs ----------------------------------------------------------
     def _path(self, name: str) -> str:
@@ -132,165 +154,144 @@ class Pipeline:
             self._weights_bc = self.spark.sparkContext.broadcast(w)
         return self._weights_bc
 
-    # ---- stages ----------------------------------------------------------
-    def tokenized(self) -> DataFrame:
-        """documents + full_text + words + BPE tokens (+F4 length cap).
-
-        The read is evenly repartitioned BEFORE the pandas UDF — see
-        _even_repartition.
-        """
+    # ---- python-stage inputs ---------------------------------------------
+    def texts(self) -> DataFrame:
+        """documents + full_text, evenly repartitioned before the python
+        stages (see _even_repartition)."""
         docs = self._even_repartition(self.documents())
-        docs = docs.withColumn("full_text", full_text_col("spans"))
-        toks = with_tokens(docs, self.codec_bc())
-        return toks.withColumn(
-            "tokens", F.slice("tokens", 1, self.cfg.max_tokens)
-        ).withColumn("n_toks", F.size("tokens"))
-
-    def stage_tokenized(self, resume: bool = True) -> DataFrame:
-        """Materialized shared subplan: BPE runs ONCE; detection, scoring and
-        the span-invariant check all read the committed table. At 100 TB the
-        same trade holds: tokens ≈ 3× text bytes, but one write beats
-        re-running the python tokenizer in every consumer stage.
-
-        Memoized per Pipeline instance: mentions AND scoring both resolve
-        this stage, and with resume=False each un-memoized call would re-run
-        the full BPE pass and commit a redundant snapshot (measured: 3
-        tokenize executions per run before the memo)."""
-        if self._toks_cache is not None:
-            return self._toks_cache
-        if self.cfg.checkpoint:
-            # resume only when the committed snapshot was produced under the
-            # SAME config — a changed max_tokens must recompute, not silently
-            # serve the stale table
-            if resume and self.io.exists_valid(
-                "docs_tokenized", {"max_tokens": self.cfg.max_tokens}
-            ):
-                self._toks_cache = self.io.read(self.spark, "docs_tokenized")
-                return self._toks_cache
-            self.io.write(
-                self.tokenized(), "docs_tokenized", stage="tokenize",
-                inputs={"documents": None},
-                config={"max_tokens": self.cfg.max_tokens},
-            )
-            self._toks_cache = self.io.read(self.spark, "docs_tokenized")
-            return self._toks_cache
-        # no-checkpoint mode: recompute instead of persist (lazily — the
-        # memo holds the PLAN, not materialized data). Caching the token
-        # structs (~30× the raw text) through the single-JVM block manager
-        # measured as the scaling killer (allocation+GC don't parallelize);
-        # the BPE recompute is python-side work that scales with cores.
-        self._toks_cache = self.tokenized()
-        return self._toks_cache
+        return docs.withColumn("full_text", full_text_col("spans"))
 
     def worded(self) -> DataFrame:
-        """documents + full_text + words — the detection input. No BPE: the
-        codec pass is needed only by the scorer, and running it here too
-        would double the python corpus passes."""
-        docs = self._even_repartition(self.documents())
-        return with_words(docs.withColumn("full_text", full_text_col("spans")))
+        """texts + words — the detection input. No BPE: the codec pass is
+        needed only by the scorer."""
+        return with_words(self.texts())
+
+    def token_arrays(self, docs: DataFrame | None = None) -> DataFrame:
+        """(doc_id, tok_ids, tok_starts) of ``docs`` (default: texts()) —
+        the scorer's token input, BPE int arrays capped at max_tokens. The
+        full struct form (with_tokens) would ship ~10× the bytes through
+        Arrow for fields the scorer never reads."""
+        return with_token_arrays(
+            self.texts() if docs is None else docs,
+            self.codec_bc(),
+            max_tokens=self.cfg.max_tokens,
+        ).select("doc_id", "tok_ids", "tok_starts")
+
+    # ---- stages ----------------------------------------------------------
+    def _observe(self, name: str, df: DataFrame, counters: dict[str, Column]) -> DataFrame:
+        if not self._counting:
+            return df
+        df, self._counts[name] = observe_counts(df, counters)
+        return df
+
+    def _stage(
+        self,
+        name: str,
+        build: Callable[[], DataFrame],
+        *,
+        stage: str,
+        resume: bool,
+        config: dict | None = None,
+        inputs: tuple[str, ...] = (),
+        partition_by: list[str] | None = None,
+        counters: dict[str, Column] | None = None,
+    ) -> DataFrame:
+        """One non-bucketed stage. Lazy mode: the built frame, its row count
+        (plus ``counters``) observed in flight under run(). Checkpoint mode: the
+        committed table ``name``, re-read — served as-is when its config
+        hash and the snapshots of its ``inputs`` tables still match,
+        otherwise built and committed with the observed counts in its
+        manifest, which is where the counter reads them either way."""
+        counters = counters or {}
+        if not self.cfg.checkpoint:
+            return self._observe(name, build(), counters)
+        lineage = {t: self.io.current_snapshot(t) for t in inputs}
+        if not (resume and self.io.exists_valid(name, config, lineage)):
+            self.io.write(
+                build(), name, stage=stage, inputs=lineage,
+                partition_by=partition_by, config=config, counters=counters,
+            )
+        self._counts[name] = lambda: self.io.manifest(name)
+        return self.io.read(self.spark, name)
 
     def stage_mentions(self, resume: bool = True) -> DataFrame:
+        """Linked mentions. Detection and dictionary resolution are one
+        stage, so the word split runs once; in checkpoint mode the unlinked
+        quarantine is committed from that stage's table (a filter over
+        parquet, no second pass over the documents)."""
+        mesh = self.mesh_dict()
+        resolved = self._stage(
+            "mentions",
+            lambda: resolve_mentions(detect_mentions(self.worded(), mesh), mesh),
+            stage="detect+link", resume=resume,
+            counters={"linked": F.sum(F.col("linked").cast("long"))},
+        )
+        linked, unlinked = split_resolved(resolved)
         if self.cfg.checkpoint:
-            # resolve the upstream table first (no-op when itself valid), so
-            # the input-snapshot lineage check below is against the LIVE
-            # tokenized snapshot — a recomputed upstream invalidates this one
-            toks = self.stage_tokenized(resume)
-            if resume and self.io.exists_valid(
-                "mentions_linked",
-                inputs={"docs_tokenized": self.io.current_snapshot("docs_tokenized")},
-            ):
-                return self.io.read(self.spark, "mentions_linked")
-        toks = self.stage_tokenized(resume) if self.cfg.checkpoint else self.worded()
-        mentions = detect_mentions(toks, self.mesh_dict())
-        linked, unlinked = link_mentions(mentions, self.mesh_dict())
-        if self.cfg.checkpoint:
-            # detection is pure JVM over the committed tokens table, so the
-            # two writes recompute only a broadcast join each
-            self.io.write(unlinked, "mentions_unlinked", stage="link")
-            self.io.write(
-                linked, "mentions_linked", stage="detect+link",
-                inputs={"docs_tokenized": self.io.current_snapshot("docs_tokenized")},
+            self._stage(
+                "mentions_unlinked", lambda: unlinked,
+                stage="link", resume=resume, inputs=("mentions",),
             )
-            return self.io.read(self.spark, "mentions_linked")
         return linked
 
-    def _score_input(self, mentions: DataFrame, resume: bool = True) -> DataFrame:
-        if self.cfg.checkpoint:
-            # read the committed full-struct tokens table
-            docs = self.stage_tokenized(resume).select(
-                "doc_id",
-                F.expr("transform(tokens, t -> t.tok_id)").alias("tok_ids"),
-                F.expr("transform(tokens, t -> t.start)").alias("tok_starts"),
-                "n_toks",
-            )
-        else:
-            # lean tokenizer: int arrays only — the full struct form ships
-            # ~10× the bytes through Arrow for fields the scorer never reads
-            docs = with_token_arrays(
-                self._even_repartition(self.documents()).withColumn(
-                    "full_text", full_text_col("spans")
-                ),
-                self.codec_bc(),
-                max_tokens=self.cfg.max_tokens,
-            ).select("doc_id", "tok_ids", "tok_starts")
+    def _score_input(self, mentions: DataFrame) -> DataFrame:
         magg = mentions.groupBy("doc_id").agg(
             F.collect_list(
                 F.struct("mention_id", "type", "mesh_id", "start", "end")
             ).alias("mentions")
         )
-        return docs.join(magg, "doc_id", "inner")
+        return self.token_arrays().join(magg, "doc_id", "inner")
 
     def stage_scores(self, mentions: DataFrame, resume: bool = True) -> DataFrame:
-        """Encode + bi-affine score, committed per doc_id hash bucket.
+        """Encode + bi-affine score behind one ROUND-ROBIN repartition to
+        4×cores tasks — lazily over the whole input, or per doc_id hash
+        bucket in checkpoint mode, each bucket committed on its own so a
+        rerun recomputes only the missing ones.
 
-        No repartitionByRange here: range partitioning needs a sampling pass
-        that re-executes the input lineage, and the scorer already groups
-        same-length docs inside each Arrow batch (encode_bucketed) — the
-        join's hash partitioning on doc_id is reused as-is, zero extra
-        shuffles."""
-        B = self.cfg.score_buckets
+        Round-robin, NOT hash-by-doc_id: the input is one row per doc, so
+        no co-location is needed, and a hash repartition on doc_id collapses
+        into the preceding join's identical partitioning — which AQE then
+        coalesces into few, UNEVEN partitions (measured: 43 ragged tasks,
+        15.9-37.9s, a 48s stage wall vs the 33.6s even-packing ideal at 32
+        cores). repartition(n) has REPARTITION_BY_NUM origin, which AQE
+        never coalesces; many tasks keep the tail short against the
+        doc-length^2 encode-cost variance. No repartitionByRange either: its
+        sampling pass would re-execute the input lineage."""
         par = self.spark.sparkContext.defaultParallelism
+        counters = (
+            {"ner": F.sum((F.col("kind") == "ner").cast("long"))}
+            if self.cfg.emit == "both" else {}
+        )
+        inp = self._score_input(mentions)
         if not self.cfg.checkpoint:
-            # ROUND-ROBIN repartition, NOT hash-by-doc_id: the input is one
-            # row per doc, so no co-location is needed, and a hash
-            # repartition on doc_id collapses into the preceding join's
-            # identical partitioning — which AQE then coalesces into few,
-            # UNEVEN partitions (measured: 43 ragged tasks, 15.9-37.9s, a
-            # 48s stage wall vs the 33.6s even-packing ideal at 32 cores).
-            # repartition(n) has REPARTITION_BY_NUM origin, which AQE never
-            # coalesces; 4×cores tasks keep the tail short against the
-            # doc-length^2 encode-cost variance.
-            inp = self._score_input(mentions, resume).repartition(par * 4)
-            return score_documents(inp, self.weights_bc(), emit=self.cfg.emit)
-        # bucket config holds only what the SCORES depend on (max_tokens,
-        # emit — a "both" run writes the kind-discriminated union schema) —
-        # theta gates downstream at stage_triples, so a theta sweep reuses
-        # the expensive committed score buckets instead of re-encoding
-        # score_buckets is part of the hash: buckets committed under a
-        # different modulus must never merge with the new partitioning (a
-        # doc would appear in two buckets and its scores double)
-        score_cfg = {
-            "max_tokens": self.cfg.max_tokens,
-            "emit": self.cfg.emit,
-            "score_buckets": B,
-        }
-        done = self.io.committed_buckets("pair_scores", score_cfg)
-        todo = [b for b in range(B) if b not in done]
-        if todo:
-            inp = self._score_input(mentions, resume).withColumn(
-                "_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(B))
+            scores = score_documents(
+                inp.repartition(par * 4), self.weights_bc(), emit=self.cfg.emit
             )
-            for b in todo:
-                part = (
-                    inp.where(F.col("_bucket") == b)
-                    .drop("_bucket")
-                    .repartition(max(4, par * 4 // B))
-                )
-                self.io.commit_bucket(
-                    score_documents(part, self.weights_bc(), emit=self.cfg.emit),
-                    "pair_scores", b, stage="encode+score",
-                    config=score_cfg,
-                )
+            return self._observe("pair_scores", scores, counters)
+        B = self.cfg.score_buckets
+        # only what the SCORES depend on (max_tokens, emit — a "both" run
+        # writes the kind-discriminated union schema): theta gates
+        # downstream at stage_triples, so a theta sweep reuses the committed
+        # score buckets. score_buckets is part of the hash: buckets committed
+        # under another modulus must never merge with the new partitioning
+        # (a doc would appear in two buckets and its scores double)
+        score_cfg = {"max_tokens": self.cfg.max_tokens, "emit": self.cfg.emit, "score_buckets": B}
+        done = self.io.committed_buckets("pair_scores", score_cfg) if resume else set()
+        for b in range(B):
+            if b in done:
+                continue
+            part = inp.where(F.pmod(F.xxhash64("doc_id"), F.lit(B)) == b).repartition(
+                max(4, par * 4 // B)
+            )
+            self.io.commit_bucket(
+                score_documents(part, self.weights_bc(), emit=self.cfg.emit),
+                "pair_scores", b, stage="encode+score",
+                config=score_cfg, counters=counters,
+            )
+        self._counts["pair_scores"] = lambda: {
+            k: self.io.bucket_rows("pair_scores", score_cfg, k)
+            for k in ("rows", *counters)
+        }
         # config-scoped read: after an emit/max_tokens change with a partial
         # recompute, stale-config buckets must not merge into the result
         return self.io.read_buckets(self.spark, "pair_scores", score_cfg)
@@ -300,8 +301,8 @@ class Pipeline:
         """Split the emit="both" kind-discriminated union into its two
         consumers' views: (pair_scores with SCORE_SCHEMA columns, ner_tags
         with NER_SCHEMA columns). Both are cheap filters over the ONE
-        committed encoder output — the 100 TB point of the joint mode is
-        that the corpus is encoded once for both artifacts."""
+        encoder output — the 100 TB point of the joint mode is that the
+        corpus is encoded once for both artifacts."""
         pairs = scores.where(F.col("kind") == "pair").select(
             "doc_id", "chem_mention_id", "dis_mention_id",
             "chem_mesh", "dis_mesh", "score",
@@ -313,139 +314,76 @@ class Pipeline:
         return pairs, ner
 
     def stage_triples(self, scores: DataFrame, resume: bool = True) -> DataFrame:
+        def build() -> DataFrame:
+            pair_scores = scores
+            if self.cfg.emit == "both":
+                pair_scores, _ = self.split_joint_scores(scores)
+            pooled = lse_pool(pair_scores, ["doc_id", "chem_mesh", "dis_mesh"], "score")
+            kept = threshold(pooled, self.cfg.theta)
+            return canonical_triples(to_triples(kept), self.mesh_dict())
+
         # the gate must cover EVERY config determinant of the triples, not
         # just theta: a max_tokens/emit change recomputes the scores, and a
         # theta-only hash would then serve stale triples on top of them
-        triples_cfg = {
-            "theta": self.cfg.theta,
-            "max_tokens": self.cfg.max_tokens,
-            "emit": self.cfg.emit,
-        }
-        if self.cfg.checkpoint and resume and self.io.exists_valid(
-            "triples", triples_cfg
-        ):
-            return self.io.read(self.spark, "triples")
-        if self.cfg.emit == "both":
-            scores, _ = self.split_joint_scores(scores)
-        pooled = lse_pool(scores, ["doc_id", "chem_mesh", "dis_mesh"], "score")
-        kept = threshold(pooled, self.cfg.theta)
-        triples = canonical_triples(to_triples(kept), self.mesh_dict())
-        if self.cfg.checkpoint:
-            self.io.write(
-                triples, "triples", stage="pool+threshold+canonicalize",
-                inputs={"pair_scores": None},
-                partition_by=["pred"],           # S7 layout mandate
-                config=triples_cfg,
-            )
-            return self.io.read(self.spark, "triples")
-        return triples
+        return self._stage(
+            "triples", build, stage="pool+threshold+canonicalize", resume=resume,
+            config={
+                "theta": self.cfg.theta,
+                "max_tokens": self.cfg.max_tokens,
+                "emit": self.cfg.emit,
+            },
+            inputs=("pair_scores",),
+            partition_by=["pred"],           # S7 layout mandate
+        )
 
     def stage_edges(self, triples: DataFrame, resume: bool = True) -> DataFrame:
-        if self.cfg.checkpoint and resume and self.io.exists_valid(
-            "edges", inputs={"triples": self.io.current_snapshot("triples")}
-        ):
-            return self.io.read(self.spark, "edges")
-        edges = dedup_triples(triples, self.cfg.salt_buckets)
-        if self.cfg.checkpoint:
-            self.io.write(
-                edges, "edges", stage="dedup+support",
-                inputs={"triples": self.io.current_snapshot("triples")},
-                partition_by=["pred"],
-            )
-            return self.io.read(self.spark, "edges")
-        return edges
+        return self._stage(
+            "edges", lambda: dedup_triples(triples, self.cfg.salt_buckets),
+            stage="dedup+support", resume=resume, inputs=("triples",),
+            partition_by=["pred"],
+        )
 
     # ---- end to end ------------------------------------------------------
     def run(self, resume: bool = True, evaluate: bool = True) -> dict:
-        """With checkpointing, each stage materializes exactly once and
-        counts come from the committed manifests. Without it, the whole DAG
-        runs as ONE action (intermediate counts ride along as ``observe``
-        metrics — no extra passes, no block-manager caching of the fat token
-        intermediates); only the small triples table is persisted for the
-        edges/eval consumers."""
-        from pyspark.sql import Observation
-
+        """Build the stage graph, run it to the edges sink and report the
+        funnel from the per-stage counters. Lazily the edges count is the
+        one action that runs the whole DAG; with checkpointing every stage
+        has already run at its commit and the count re-reads the committed
+        edges. The small triples table is persisted for the edges and eval
+        consumers and released before returning."""
         t0 = time.time()
-        mentions = self.stage_mentions(resume)
-        m_obs = s_obs = None
-        if not self.cfg.checkpoint:
-            m_obs = Observation("mentions_rows")
-            mentions = mentions.observe(m_obs, F.count(F.lit(1)).alias("n"))
-        scores = self.stage_scores(mentions, resume)
-        if not self.cfg.checkpoint:
-            s_obs = Observation("score_rows")
-            aggs = [F.count(F.lit(1)).alias("n")]
-            if self.cfg.emit == "both":
-                # ner row count rides the same observation — no extra job
-                aggs.append(
-                    F.sum((F.col("kind") == "ner").cast("long")).alias("n_ner")
-                )
-            scores = scores.observe(s_obs, *aggs)
-        triples = self.stage_triples(scores, resume)
-        t_obs = None
-        if not self.cfg.checkpoint:
-            triples = triples.persist()
-            # one action materializes everything: edges.count() fills the
-            # triples persist on the way through the dedup, and the triples
-            # row count rides along as an observation (a separate
-            # triples.count() job costs ~1-2s of pure serial time per run)
-            t_obs = Observation("triple_rows")
-            edges = self.stage_edges(
-                triples.observe(t_obs, F.count(F.lit(1)).alias("n")), resume
-            )
-        else:
-            edges = self.stage_edges(triples, resume)
-
-        if self.cfg.checkpoint:
-            n_triples = self.io.manifest("triples")["rows"]
-            n_mentions = self.io.manifest("mentions_linked")["rows"]
-            score_cfg = {
-                "max_tokens": self.cfg.max_tokens,
-                "emit": self.cfg.emit,
-                "score_buckets": self.cfg.score_buckets,
+        self._counting = True
+        scores = self.stage_scores(self.stage_mentions(resume), resume)
+        triples = self.stage_triples(scores, resume).persist()
+        try:
+            self.stage_edges(triples, resume).count()
+            c = {name: counts() for name, counts in self._counts.items()}
+            n_ner = c["pair_scores"].get("ner")
+            out = {
+                "docs": self._n_docs(),
+                "mentions": c["mentions"]["linked"],
+                "pair_scores": c["pair_scores"]["rows"] - (n_ner or 0),
+                "triples": c["triples"]["rows"],
+                "edges": c["edges"]["rows"],
+                "wall_s": round(time.time() - t0, 3),
             }
-            # config-scoped: stale-config leftover buckets (e.g. after a
-            # score_buckets change) are excluded from the data by
-            # read_buckets, so the counter must exclude them too
-            n_scores = self.io.bucket_rows("pair_scores", score_cfg)
-            n_edges = self.io.manifest("edges")["rows"]
-            n_ner = (
-                self.io.read_buckets(self.spark, "pair_scores", score_cfg)
-                .where(F.col("kind") == "ner").count()
-                if self.cfg.emit == "both" else None
-            )
-        else:
-            n_edges = edges.count()
-            n_mentions = int(m_obs.get["n"])
-            n_scores = int(s_obs.get["n"])
-            n_triples = int(t_obs.get["n"])
-            # F.sum over zero observed rows yields NULL -> None
-            n_ner = (
-                int(s_obs.get["n_ner"] or 0) if self.cfg.emit == "both" else None
-            )
-        out = {
-            "docs": self._n_docs(),
-            "mentions": n_mentions,
-            "pair_scores": n_scores if n_ner is None else n_scores - n_ner,
-            "triples": n_triples,
-            "edges": n_edges,
-            "wall_s": round(time.time() - t0, 3),
-        }
-        if n_ner is not None:
-            out["ner_tags"] = n_ner
-        if evaluate:
-            gold = self.spark.read.parquet(self._path("gold_relations")).select(
-                "doc_id", "chem_mesh", "dis_mesh"
-            )
-            pred = triples.select(
-                F.col("subj").alias("chem_mesh"),
-                F.col("obj").alias("dis_mesh"),
-                "doc_id",
-            )
-            m = confusion(pred, gold).head()
-            out.update(
-                {"precision": m.precision, "recall": m.recall, "f1": m.f1}
-            )
+            if n_ner is not None:
+                out["ner_tags"] = n_ner
+            if evaluate:
+                gold = self.spark.read.parquet(self._path("gold_relations")).select(
+                    "doc_id", "chem_mesh", "dis_mesh"
+                )
+                pred = triples.select(
+                    F.col("subj").alias("chem_mesh"),
+                    F.col("obj").alias("dis_mesh"),
+                    "doc_id",
+                )
+                m = confusion(pred, gold).head()
+                out.update(
+                    {"precision": m.precision, "recall": m.recall, "f1": m.f1}
+                )
+        finally:
+            triples.unpersist()
         return out
 
 
@@ -456,7 +394,7 @@ def flagship(spark: SparkSession, fixture_dir: str, checkpoint_root: str | None 
     composed (no checkpointing) so the driver can inspect the single plan."""
     cfg = PipelineConfig(
         fixture_dir=fixture_dir,
-        checkpoint_root=checkpoint_root or os.path.join(os.getcwd(), "checkpoints", "entry"),
+        checkpoint_root=checkpoint_root,
         checkpoint=checkpoint,
         theta=theta,
     )

@@ -31,9 +31,23 @@ import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def observe_counts(
+    df: DataFrame, counters: dict[str, Column] | None = None
+) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
+    """``df`` with its row count — plus ``counters``, named aggregate
+    columns — observed in flight (no extra job). The returned callable
+    blocks until an action over the frame has finished, then gives
+    ``{"rows": n, **counters}``; a sum over zero rows reads 0."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    aggs += [c.alias(k) for k, c in (counters or {}).items()]
+    return df.observe(obs, *aggs), lambda: {k: int(v or 0) for k, v in obs.get.items()}
 
 
 class ManifestParquetTableIO:
@@ -67,12 +81,14 @@ class ManifestParquetTableIO:
         inputs: dict[str, int | None] | None = None,
         partition_by: list[str] | None = None,
         config: dict | None = None,
+        counters: dict[str, Column] | None = None,
     ) -> int:
         """Commit ``df`` as the next snapshot of ``table``.
 
-        Lineage counters ride the write itself via ``observe`` (rows, and
-        per-spark-partition counts from a low-cost groupBy written alongside).
-        Returns the new snapshot id.
+        Lineage counters ride the write itself via ``observe`` (rows plus
+        ``counters``, recorded under their names in the manifest), and
+        per-file row counts come from the parquet footers. Returns the new
+        snapshot id.
         """
         tdir = self._tdir(table)
         os.makedirs(tdir, exist_ok=True)
@@ -80,14 +96,12 @@ class ManifestParquetTableIO:
         snap = 0 if prev is None else prev + 1
         t0 = time.time()
 
-        obs = Observation(f"{table}-{snap}")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        observed, counts = observe_counts(df, counters)
         tmp = os.path.join(tdir, f"_tmp-{uuid.uuid4().hex}")
         writer = observed.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        rows = int(obs.get["rows"])
 
         # per-partition counters: file-level row counts from the parquet
         # footers (no second Spark job over the data)
@@ -111,7 +125,7 @@ class ManifestParquetTableIO:
             "snapshot": snap,
             "stage": stage,
             "inputs": inputs or {},
-            "rows": rows,
+            **counts(),
             "partition_counts": part_counts,
             "n_files": len(part_counts),
             "config_hash": self._cfg_hash(config),
@@ -184,17 +198,17 @@ class ManifestParquetTableIO:
         return out
 
     def commit_bucket(
-        self, df: DataFrame, table: str, bucket: int, stage: str, config: dict | None = None
+        self, df: DataFrame, table: str, bucket: int, stage: str,
+        config: dict | None = None, counters: dict[str, Column] | None = None,
     ) -> int:
         bdir = os.path.join(self._tdir(table), "buckets")
         os.makedirs(bdir, exist_ok=True)
         tmp = os.path.join(bdir, f"_tmp-{bucket}-{uuid.uuid4().hex}")
         t0 = time.time()
-        obs = Observation(f"{table}-b{bucket}")
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
-        rows = int(obs.get["rows"])
+        observed, counts = observe_counts(df, counters)
+        observed.write.mode("overwrite").parquet(tmp)
         man = {
-            "table": table, "bucket": bucket, "stage": stage, "rows": rows,
+            "table": table, "bucket": bucket, "stage": stage, **counts(),
             "config_hash": self._cfg_hash(config),
             "wall_s": round(time.time() - t0, 3),
         }
@@ -204,19 +218,21 @@ class ManifestParquetTableIO:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        return rows
+        return man["rows"]
 
-    def bucket_rows(self, table: str, config: dict | None = None) -> int:
-        """Total committed rows across buckets (config-scoped like
-        committed_buckets) straight from the bucket manifests — the funnel
-        counter, no Spark job."""
+    def bucket_rows(
+        self, table: str, config: dict | None = None, key: str = "rows"
+    ) -> int:
+        """Total of one manifest counter (committed rows by default) across
+        buckets, config-scoped like committed_buckets, straight from the
+        bucket manifests — the funnel counter, no Spark job."""
         bdir = os.path.join(self._tdir(table), "buckets")
         total = 0
         for b in self.committed_buckets(table, config):
             man = json.load(
                 open(os.path.join(bdir, f"bucket-{b}", "_MANIFEST.json"))
             )
-            total += man["rows"]
+            total += man[key]
         return total
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:

@@ -59,27 +59,18 @@ def incremental_triples(
     """Drain new document files from ``docs_dir`` into the triples sink.
 
     Returns the number of micro-batches processed. Each micro-batch runs the
-    full batch DAG (tokenize → detect → score → pool → threshold → triples)
-    on only the new documents — identical semantics to a batch catch-up, with
+    lazy flagship DAG (pipeline.flagship: detect → link → tokenize → score →
+    pool → threshold → triples) on only the new documents — identical semantics to a batch catch-up, with
     exactly-once file tracking from the streaming checkpoint.
     """
-    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
+    from bran_spark.plans.pipeline import flagship
 
-    cfg = PipelineConfig(
-        fixture_dir=fixture_dir,
-        checkpoint_root=os.path.join(checkpoint_dir, "_unused_tableio"),
-        checkpoint=False,
-        theta=theta,
-    )
     n_batches = {"n": 0}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        p = Pipeline(spark, cfg, docs_df=batch_df)
-        mentions = p.stage_mentions(resume=False)
-        scores = p.stage_scores(mentions, resume=False)
-        triples = p.stage_triples(scores, resume=False)
+        triples = flagship(spark, fixture_dir, theta=theta, docs_df=batch_df)
         (
             triples.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")

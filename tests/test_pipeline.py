@@ -22,31 +22,45 @@ def _triples_rows(df):
 
 
 def test_flagship_runs_and_matches_golden(spark, fx_dir):
-    got = _triples_rows(flagship(spark, fx_dir))
+    """Golden parity, gated on the properties it protects. The
+    (subj, pred, obj, doc_id) set equals the frozen set exactly (P/R >= 0.95
+    is checked first, for a readable failure). The golden stores scores
+    rounded to 6 decimals: two scores less than 1e-6 apart round at most one
+    unit apart in that digit, so each rounded score may differ from its
+    golden by one unit and no more. The frozen last digits record one BLAS
+    kernel's float bits — which triples move changes with
+    OPENBLAS_CORETYPE — so bitwise score equality is a same-machine
+    property, pinned by test_partition_invariance."""
+    got = {
+        (r.subj, r.pred, r.obj, r.doc_id): r.score
+        for r in flagship(spark, fx_dir).select("subj", "pred", "obj", "doc_id", "score").collect()
+    }
     assert len(got) > 0
     if not os.path.exists(GOLDEN):
         pytest.skip("golden not frozen yet (run tools/freeze_golden.py)")
     with open(GOLDEN) as f:
         want = {
-            (r["subj"], r["pred"], r["obj"], r["doc_id"], float(r["score"]))
+            (r["subj"], r["pred"], r["obj"], r["doc_id"]): float(r["score"])
             for r in csv.DictReader(f)
         }
     # P/R >= 0.95 gate (BASELINE.md); with identical config we expect 1.0
-    inter = len(got & want)
+    inter = len(got.keys() & want.keys())
     precision = inter / len(got)
     recall = inter / len(want)
     assert precision >= 0.95 and recall >= 0.95, (precision, recall, len(got), len(want))
-    assert got == want, f"non-identical: P={precision} R={recall}"
+    assert got.keys() == want.keys(), f"non-identical: P={precision} R={recall}"
+    units = {k: abs(round(got[k] * 1e6) - round(want[k] * 1e6)) for k in want}
+    worst = max(units, key=units.get)
+    assert units[worst] <= 1, (worst, got[worst], want[worst])
 
 
 def test_span_sequence_preserved(spark, fx_dir):
     """BASELINE.json per-row invariant: the (kind, text, media_ref, order)
-    span sequence is bit-identical after the tokenize stage (stages never
+    span sequence is bit-identical in the detection input (stages never
     mutate the spans column)."""
-    cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint_root="/tmp/unused", checkpoint=False)
-    p = Pipeline(spark, cfg)
+    p = Pipeline(spark, PipelineConfig(fixture_dir=fx_dir, checkpoint=False))
     orig = p.documents().select("doc_id", "spans")
-    staged = p.tokenized().select("doc_id", "spans")
+    staged = p.worded().select("doc_id", "spans")
     assert orig.exceptAll(staged).count() == 0
     assert staged.exceptAll(orig).count() == 0
 
@@ -57,25 +71,79 @@ def test_partition_invariance(spark, fx_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        cfg_a = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_a",
-            checkpoint=False, score_buckets=2,
-        )
+        cfg_a = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, score_buckets=2)
         pa = Pipeline(spark, cfg_a)
         ma = pa.stage_mentions(resume=False)
         ta = _triples_rows(pa.stage_triples(pa.stage_scores(ma, resume=False), resume=False))
 
         spark.conf.set("spark.sql.shuffle.partitions", "16")
-        cfg_b = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_b",
-            checkpoint=False, score_buckets=8,
-        )
+        cfg_b = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, score_buckets=8)
         pb = Pipeline(spark, cfg_b)
         mb = pb.stage_mentions(resume=False)
         tb = _triples_rows(pb.stage_triples(pb.stage_scores(mb, resume=False), resume=False))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert ta == tb
+
+
+def _docs_subset(spark, fx_dir, n):
+    return (
+        spark.read.parquet(os.path.join(fx_dir, "documents_interleaved.parquet"))
+        .orderBy("doc_id").limit(n)
+    )
+
+
+@pytest.mark.parametrize("emit", ["pairs", "both"])
+def test_checkpoint_and_lazy_runs_agree(spark, fx_dir, tmp_path, emit):
+    """Checkpointing is a sink on the one stage graph, not a second DAG:
+    run(checkpoint=True) and run(checkpoint=False) over the same input give
+    the same triples and the same funnel (manifest counters vs in-flight
+    Observations)."""
+    docs = _docs_subset(spark, fx_dir, 60)
+
+    def pipeline(checkpoint):
+        cfg = PipelineConfig(
+            fixture_dir=fx_dir, checkpoint=checkpoint, emit=emit, score_buckets=2,
+            checkpoint_root=str(tmp_path / "ck") if checkpoint else None,
+        )
+        return Pipeline(spark, cfg, docs_df=docs)
+
+    staged = pipeline(True)
+    funnel_ck = staged.run()
+    triples_ck = _triples_rows(staged.io.read(spark, "triples"))
+    funnel_lazy = pipeline(False).run()
+    lazy = pipeline(False)
+    triples_lazy = _triples_rows(
+        lazy.stage_triples(lazy.stage_scores(lazy.stage_mentions()))
+    )
+    for funnel in (funnel_ck, funnel_lazy):
+        funnel.pop("wall_s")
+    assert funnel_ck["triples"] > 0
+    assert funnel_ck == funnel_lazy
+    assert triples_ck == triples_lazy
+
+
+def test_lazy_run_leaves_no_cached_plan(spark, fx_dir):
+    """run() persists the triples for its edges and eval consumers; it must
+    release them, or every run leaks an InMemoryRelation into the
+    session's CacheManager."""
+    spark.catalog.clearCache()
+    cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint=False)
+    Pipeline(spark, cfg, docs_df=_docs_subset(spark, fx_dir, 20)).run(evaluate=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_lazy_flagship_touches_no_disk(spark, fx_dir, tmp_path):
+    """Without checkpointing no table IO is opened: a lazy flagship given a
+    checkpoint_root never creates it. Checkpointing without a root is a
+    config error."""
+    root = tmp_path / "never"
+    flagship(
+        spark, fx_dir, checkpoint_root=str(root), docs_df=_docs_subset(spark, fx_dir, 20)
+    ).count()
+    assert not root.exists()
+    with pytest.raises(ValueError):
+        PipelineConfig(fixture_dir=fx_dir, checkpoint=True)
 
 
 def test_eval_metrics_emitted(spark, fx_dir, tmp_path):
@@ -94,16 +162,10 @@ def test_joint_emit_both_end_to_end(spark, fx_dir):
     full DAG: the funnel reports a ner_tags row, and the triples are
     IDENTICAL to a pairs-only run — the joint head must not perturb the
     relation path (it is one extra matmul on the same encoding)."""
-    docs = (
-        spark.read.parquet(os.path.join(fx_dir, "documents_interleaved.parquet"))
-        .orderBy("doc_id").limit(60)
-    )
+    docs = _docs_subset(spark, fx_dir, 60)
 
     def run(emit):
-        cfg = PipelineConfig(
-            fixture_dir=fx_dir, checkpoint_root="/tmp/unused_joint",
-            checkpoint=False, emit=emit,
-        )
+        cfg = PipelineConfig(fixture_dir=fx_dir, checkpoint=False, emit=emit)
         p = Pipeline(spark, cfg, docs_df=docs)
         res = p.run(resume=False, evaluate=False)
         return res

@@ -6,7 +6,11 @@ time at test scale."""
 
 from __future__ import annotations
 
+import os
+import re
+
 import pyspark.sql.functions as F
+import pytest
 
 from bran_spark.plans.oracle_queries import QUERIES
 
@@ -46,6 +50,109 @@ def test_dimension_joins_are_broadcast(spark, fx_dir):
     plan = _plan(detect_mentions(with_words(docs), mesh))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def _python_nodes(plan: str, udf: str) -> list[int]:
+    """Line numbers of the ArrowEvalPython nodes that evaluate ``udf``."""
+    return [
+        i for i, line in enumerate(plan.splitlines())
+        if "ArrowEvalPython [" in line and f"{udf}(" in line
+    ]
+
+
+def test_flagship_plan_shape(spark, fx_dir):
+    """The lazy flagship plan at sf0.001 on local[4]: 3 ArrowEvalPython,
+    1 MapInPandas, 5 shuffle Exchanges (round-robin before each python
+    stage, per-doc mention collect on doc_id, LSE pool on (doc, chem, dis)).
+
+    words_udf appears twice: Catalyst infers ``size(words) > 0`` from the
+    detection posexplode and pushes it below the even repartition, so the
+    word split also runs on the raw source splits. That is the known
+    duplicate a later change removes; it then lowers these counts."""
+    from bran_spark.plans.pipeline import flagship
+
+    plan = _plan(flagship(spark, fx_dir))
+    assert plan.count("ArrowEvalPython [") == 3
+    assert len(_python_nodes(plan, "words_udf")) == 2
+    assert len(_python_nodes(plan, "ta_udf")) == 1
+    assert plan.count("MapInPandas ") == 1
+    assert len(re.findall(r"\bExchange\b", plan)) == 5
+
+
+class _PlanSpy:
+    """The pipeline's table IO, recording the physical plan of every frame
+    it commits (table or table/bucket, plan)."""
+
+    def __init__(self, io):
+        self._io = io
+        self.plans: list[tuple[str, str]] = []
+
+    def __getattr__(self, name):
+        return getattr(self._io, name)
+
+    def write(self, df, table, stage, **kw):
+        self.plans.append((table, _plan(df)))
+        return self._io.write(df, table, stage, **kw)
+
+    def commit_bucket(self, df, table, bucket, stage, **kw):
+        self.plans.append((f"{table}/{bucket}", _plan(df)))
+        return self._io.commit_bucket(df, table, bucket, stage, **kw)
+
+
+@pytest.fixture(scope="module")
+def checkpoint_commit_plans(spark, fx_dir, tmp_path_factory):
+    """Plans committed by one checkpoint-mode run over a 40-doc single-file
+    corpus (few splits, so the even repartition is in the plan as at
+    sf0.001)."""
+    from bran_spark.plans.pipeline import Pipeline, PipelineConfig
+
+    tmp = tmp_path_factory.mktemp("ck_plans")
+    src = str(tmp / "docs.parquet")
+    (
+        spark.read.parquet(os.path.join(fx_dir, "documents_interleaved.parquet"))
+        .orderBy("doc_id").limit(40).coalesce(1).write.parquet(src)
+    )
+    cfg = PipelineConfig(
+        fixture_dir=fx_dir, checkpoint_root=str(tmp / "ck"), score_buckets=2
+    )
+    p = Pipeline(spark, cfg, docs_df=spark.read.parquet(src))
+    p.io = _PlanSpy(p.io)
+    p.run(resume=False, evaluate=False)
+    return p.io.plans
+
+
+def test_checkpoint_mode_splits_words_in_one_commit(spark, fx_dir, checkpoint_commit_plans):
+    """Checkpointing commits the lazy stages instead of re-running them:
+    the word split is in the detect+link commit only, with as many UDF
+    nodes as the lazy flagship plan has, so no second action tokenizes the
+    corpus again."""
+    from bran_spark.plans.pipeline import flagship
+
+    lazy = len(_python_nodes(_plan(flagship(spark, fx_dir)), "words_udf"))
+    per_commit = {
+        name: len(_python_nodes(plan, "words_udf"))
+        for name, plan in checkpoint_commit_plans
+    }
+    assert per_commit.pop("mentions") == lazy
+    assert set(per_commit.values()) == {0}, per_commit
+
+
+def test_checkpoint_score_buckets_tokenize_only_their_documents(checkpoint_commit_plans):
+    """Each pair_scores bucket's token UDF sits over a document FileScan
+    whose DataFilters carry the bucket predicate, so a bucket tokenizes
+    only its own documents."""
+    buckets = [(n, p) for n, p in checkpoint_commit_plans if n.startswith("pair_scores/")]
+    assert len(buckets) == 2
+    for name, plan in buckets:
+        lines = plan.splitlines()
+        (at,) = _python_nodes(plan, "ta_udf")
+        depth = len(lines[at]) - len(lines[at].lstrip(" :|+-"))
+        scan = next(
+            line for line in lines[at + 1:]
+            if "FileScan" in line and len(line) - len(line.lstrip(" :|+-")) > depth
+        )
+        data_filters = scan.split("DataFilters: [")[1].split("]")[0]
+        assert "pmod(xxhash64(doc_id" in data_filters, (name, scan)
 
 
 def test_relational_corpus_ops_have_no_python(spark, testdata_dir):
