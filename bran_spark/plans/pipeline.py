@@ -216,7 +216,7 @@ class Pipeline:
 
     def stage_mentions(self, resume: bool = True) -> DataFrame:
         """Linked mentions. Detection and dictionary resolution are one
-        stage, so the word split runs once; in checkpoint mode the unlinked
+        stage, so the word split is one action; in checkpoint mode the unlinked
         quarantine is committed from that stage's table (a filter over
         parquet, no second pass over the documents)."""
         mesh = self.mesh_dict()
